@@ -1,10 +1,11 @@
 """Atomically-committed parquet state: data + batch marker in ONE rename.
 
-``batch_guard`` closes the foreachBatch at-least-once window for
-maintainers whose folds are idempotent under one replayed batch — but
-the join IVM's B-side accumulates per-order line SUMS, so a crash
-BETWEEN the state write and the marker write re-applies one batch and
-double-counts (the residual window the r8 verdict asked to close).
+Structured Streaming's ``foreachBatch`` is AT-LEAST-ONCE: after a sink
+failure the engine re-invokes the function with the SAME ``batch_id``
+and the same data.  A separate batch-id marker written after the state
+leaves a crash window between the two, and a maintainer whose fold
+accumulates (the join IVM's per-order line SUMS, the IVM aggregates)
+double-counts the re-applied batch.
 
 ``ManifestState`` removes the window entirely by making the data files,
 the batch id, the stream-lineage id, AND the (metadata-sized) driver
@@ -17,9 +18,8 @@ built from primitives this repo already trusts (``os.replace``):
   interrupted attempt can never collide with its own retry;
 * a single JSON manifest maps each live logical partition (e.g.
   ``tbl|bucket``) to its current ``_b`` and carries ``batch_id`` /
-  ``run_id`` / caller extras (the join IVM stores its aggregate rows
-  here, which also makes the aggregate restart-durable — previously it
-  was driver memory);
+  ``run_id`` / caller extras (the IVM maintainers store their aggregate
+  rows and bucket layout here, which makes both restart-durable);
 * commit = ONE ``os.replace`` of the manifest.  Crash before it: the
   new files are orphans no reader ever sees (swept on the next commit).
   Crash after it: the batch is fully applied and the guard skips the
@@ -71,8 +71,14 @@ class ManifestState:
             return None
 
     def already_applied(self, batch_id: int, run_id: Optional[str] = None) -> bool:
-        """Replay guard, same lineage semantics as ``batch_guard``: a
-        manifest from a DIFFERENT run_id never suppresses a batch."""
+        """Replay guard: True iff ``batch_id`` is already committed.
+
+        ``run_id`` identifies the stream lineage (conventionally the
+        checkpoint path).  A manifest from a DIFFERENT run_id never
+        suppresses a batch: a fresh-checkpoint restart resets batch ids
+        to 0, and skipping until they outgrow the previous lineage's
+        high-water would silently drop data (ADVICE r8).  Callers that
+        pass no run_id keep the plain high-water contract."""
         m = self.load()
         if m is None or batch_id is None:
             return False

@@ -4,10 +4,12 @@ The two halves of this engine composed: a CDC change stream over the
 document corpus (inserts, text-rewriting updates, deletes) maintains the
 MinHash signature index *incrementally* — each micro-batch recomputes
 signatures only for the documents it touched and merges them into
-bucketed parquet state with dynamic partition overwrite (the same
-O(touched-buckets) I/O shape as ``operators/ivm.py``).  A batch engine
-would re-shingle the whole corpus after every change; at 100 TB the
-index rebuild IS the cost, and this keeps it ∝ changed documents.
+bucketed, manifest-committed parquet state (``operators/atomic_state.py``:
+only the touched buckets are restaged, and one manifest rename commits
+them with the batch id — the same O(touched-buckets) I/O shape as
+``operators/ivm.py``).  A batch engine would re-shingle the whole
+corpus after every change; at 100 TB the index rebuild IS the cost, and
+this keeps it ∝ changed documents.
 
 The registered query streams a deterministic synthetic change log
 (inserts of the corpus, then revisions of doc_id % 7 == 3, then deletes
@@ -40,8 +42,9 @@ from pypgcdc_spark.operators.dedup import (
     minhash_signatures_from_text,
 )
 from pypgcdc_spark.operators.retrieval import BM25_B, BM25_K1, BM25_QUERY, BM25_TOPK
-from pypgcdc_spark.operators.batch_guard import already_applied, mark_applied
-from pypgcdc_spark.operators.state_prune import prune_buckets, touched_buckets
+from pypgcdc_spark.operators.atomic_state import ManifestState
+from pypgcdc_spark.operators.join_ivm import delta_step_conf
+from pypgcdc_spark.operators.state_prune import touched_buckets
 from pypgcdc_spark.queries import load, query
 
 UPDATE_MOD, UPDATE_REM = 7, 3  # doc_id % 7 == 3 → text revised
@@ -62,13 +65,14 @@ def _shingles_of(docs: DataFrame) -> DataFrame:
 class SignatureIndexMaintainer:
     """foreachBatch maintainer of a bucketed MinHash signature table.
 
-    State: ONE parquet dataset partitioned by ``bucket = doc_id %
-    N_SIG_BUCKETS``; rows are (doc_id, lsn, deleted, mh0..mh{N-1}).
-    Each batch: keep the max-LSN version per doc, drop rows older than
-    the already-stored LSN (out-of-order guard), re-shingle only batch
-    docs, and rewrite only touched buckets (dynamic partition overwrite).
-    Deletes leave tombstones so a late stale update cannot resurrect a
-    deleted document."""
+    State: ONE manifest-committed parquet dataset partitioned by
+    ``bucket = doc_id % N_SIG_BUCKETS``; rows are (doc_id, lsn, deleted,
+    mh0..mh{N-1}).  Each batch: keep the max-LSN version per doc, drop
+    rows older than the already-stored LSN (out-of-order guard),
+    re-shingle only batch docs, and restage only touched buckets — one
+    manifest rename commits them with the batch id.  Deletes leave
+    tombstones so a late stale update cannot resurrect a deleted
+    document."""
 
     def __init__(
         self,
@@ -78,13 +82,15 @@ class SignatureIndexMaintainer:
         guard_id: str = None,
     ):
         self.spark = spark
-        self.work = work_dir
         self.n_buckets = n_buckets
         # Stream-lineage identity for the replay guard (checkpoint path):
         # batch ids reset under a fresh checkpoint (ADVICE r8).
         self.guard_id = guard_id
-        self.path = f"{work_dir}/sig_state"
-        self._has_state = False
+        self.state = ManifestState(spark, f"{work_dir}/sig_state", ["bucket"])
+
+    _SCHEMA = "bucket INT, doc_id LONG, lsn LONG, deleted BOOLEAN, " + ", ".join(
+        f"mh{s} LONG" for s in range(N_MINHASH)
+    )
 
     def _read_state(self, bucket_ids: list) -> DataFrame:
         """State rows of the touched buckets only, via a static ``isin``
@@ -93,40 +99,15 @@ class SignatureIndexMaintainer:
         but relied on dynamic partition pruning, which does not fire on
         this plan shape — the full state parquet was scanned every batch
         (ADVICE r7; see ``state_prune.py``)."""
-        mh_cols = ", ".join(f"mh{s} LONG" for s in range(N_MINHASH))
-        schema = f"doc_id LONG, lsn LONG, deleted BOOLEAN, {mh_cols}"
-        if not self._has_state:
-            return self.spark.createDataFrame([], schema)
-        return prune_buckets(self.spark.read.parquet(self.path), bucket_ids).drop(
-            "bucket"
-        )
+        return self.state.read(
+            self._SCHEMA, F.col("bucket").isin([int(b) for b in bucket_ids])
+        ).drop("bucket")
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if already_applied(self.work, batch_id, self.guard_id):
+        if self.state.already_applied(batch_id, self.guard_id):
             return  # foreachBatch replay (at-least-once): already committed
-        conf = self.spark.conf
-        # Same delta-step conf discipline as the IVM maintainers (r12):
-        # per-batch data is bucket-sized, so right-size the tiny shuffles
-        # to the bucket count, prefer hash joins (no sort), and skip
-        # AQE's per-stage materialize+replan barrier (measured ~0.7 s per
-        # 4-batch drain on the sibling BucketedViewMaintainer).
-        saved = {
-            k: conf.get(k)
-            for k in (
-                "spark.sql.shuffle.partitions",
-                "spark.sql.join.preferSortMergeJoin",
-                "spark.sql.adaptive.enabled",
-            )
-        }
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        conf.set("spark.sql.shuffle.partitions", str(min(self.n_buckets, 64)))
-        conf.set("spark.sql.join.preferSortMergeJoin", "false")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        with delta_step_conf(self.spark, self.n_buckets):
             self._apply(batch_df, batch_id)
-        finally:
-            for k, v in saved.items():
-                conf.set(k, v)
 
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         bucket = F.pmod(F.col("doc_id"), F.lit(self.n_buckets)).cast("int")
@@ -135,7 +116,7 @@ class SignatureIndexMaintainer:
         # separate isEmpty() action cost one extra Spark job per batch).
         batch_buckets = touched_buckets(batch_df, bucket)
         if not batch_buckets:
-            mark_applied(self.work, batch_id, self.guard_id)
+            self.state.finalize(None, [], batch_id, self.guard_id)
             return
 
         # Newest version per doc as ONE partial aggregation (max_by) —
@@ -178,19 +159,17 @@ class SignatureIndexMaintainer:
         untouched_docs = old.join(
             fresh.select("doc_id"), "doc_id", "left_anti"
         )
-        new_state = (
-            untouched_docs.unionByName(replacement)
-            .withColumn("bucket", bucket)
-            .localCheckpoint(eager=True)  # never read-from what we overwrite
+        new_state = untouched_docs.unionByName(replacement).withColumn(
+            "bucket", bucket
         )
-        new_state.write.mode("overwrite").partitionBy("bucket").parquet(self.path)
-        self._has_state = True
-        mark_applied(self.work, batch_id, self.guard_id)
+        self.state.commit(
+            new_state, [(int(b),) for b in batch_buckets], batch_id, self.guard_id
+        )
 
     def signatures(self) -> DataFrame:
         """Live long-layout signatures (doc_id, seed, mh) from the index."""
         wide = (
-            self.spark.read.parquet(self.path)
+            self.state.read(self._SCHEMA)
             .filter(~F.col("deleted"))
             .drop("bucket", "lsn", "deleted")
         )
@@ -296,8 +275,8 @@ def cdc_minhash_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     live signature index (long layout).
 
     Plan per batch: shingle+hash ONLY the batch's documents (map-side),
-    one groupBy(doc_id) for the signature agg, and a dynamic-partition
-    overwrite of the touched state buckets.  Per-batch cost is
+    one groupBy(doc_id) for the signature agg, and a manifest-committed
+    restage of the touched state buckets.  Per-batch cost is
     ∝ changed documents — the property that makes a 100 TB dedup index
     maintainable at all."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -337,11 +316,12 @@ class PostingsIndexMaintainer:
     n_buckets`` with rows (doc_id, lsn, deleted, t, f, dl) — one row per
     (document, term) plus a dl-carrying marker row per live document and
     tombstones for deletes.  Each batch re-tokenizes ONLY its touched
-    documents and rewrites ONLY their buckets (dynamic partition
-    overwrite) — the property that keeps a corpus-scale search index
-    maintainable under a CDC feed.  Same guards as the signature index:
-    max-LSN-per-doc within the batch, stale-LSN rejection against stored
-    state, tombstones against resurrection."""
+    documents and restages ONLY their buckets (one manifest rename
+    commits them with the batch id) — the property that keeps a
+    corpus-scale search index maintainable under a CDC feed.  Same
+    guards as the signature index: max-LSN-per-doc within the batch,
+    stale-LSN rejection against stored state, tombstones against
+    resurrection."""
 
     def __init__(
         self,
@@ -351,50 +331,29 @@ class PostingsIndexMaintainer:
         guard_id: str = None,
     ):
         self.spark = spark
-        self.work = work_dir
         self.n_buckets = n_buckets
         # Stream-lineage identity for the replay guard (checkpoint path):
         # batch ids reset under a fresh checkpoint (ADVICE r8).
         self.guard_id = guard_id
-        self.path = f"{work_dir}/postings_state"
-        self._has_state = False
+        self.state = ManifestState(spark, f"{work_dir}/postings_state", ["bucket"])
 
-    _SCHEMA = "doc_id LONG, lsn LONG, deleted BOOLEAN, t STRING, f LONG, dl LONG"
+    _SCHEMA = (
+        "bucket INT, doc_id LONG, lsn LONG, deleted BOOLEAN, t STRING, f LONG, dl LONG"
+    )
 
     def _read_state(self, bucket_ids: list) -> DataFrame:
         """Touched-bucket state via a static ``isin`` partition filter
         (bounded collected bucket ids; DPP does not fire on the
         broadcast-join shape — see ``state_prune.py``)."""
-        if not self._has_state:
-            return self.spark.createDataFrame([], self._SCHEMA)
-        return prune_buckets(self.spark.read.parquet(self.path), bucket_ids).drop(
-            "bucket"
-        )
+        return self.state.read(
+            self._SCHEMA, F.col("bucket").isin([int(b) for b in bucket_ids])
+        ).drop("bucket")
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if already_applied(self.work, batch_id, self.guard_id):
+        if self.state.already_applied(batch_id, self.guard_id):
             return  # foreachBatch replay (at-least-once): already committed
-        conf = self.spark.conf
-        # Same delta-step conf discipline as the IVM maintainers (r12):
-        # bucket-sized shuffles, hash joins, AQE's micro-batch replan
-        # barrier off (saved/restored).
-        saved = {
-            k: conf.get(k)
-            for k in (
-                "spark.sql.shuffle.partitions",
-                "spark.sql.join.preferSortMergeJoin",
-                "spark.sql.adaptive.enabled",
-            )
-        }
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        conf.set("spark.sql.shuffle.partitions", str(min(self.n_buckets, 64)))
-        conf.set("spark.sql.join.preferSortMergeJoin", "false")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        with delta_step_conf(self.spark, self.n_buckets):
             self._apply(batch_df, batch_id)
-        finally:
-            for k, v in saved.items():
-                conf.set(k, v)
 
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         bucket = F.pmod(F.col("doc_id"), F.lit(self.n_buckets)).cast("int")
@@ -403,7 +362,7 @@ class PostingsIndexMaintainer:
         # separate isEmpty() action cost one extra Spark job per batch).
         batch_buckets = touched_buckets(batch_df, bucket)
         if not batch_buckets:
-            mark_applied(self.work, batch_id, self.guard_id)
+            self.state.finalize(None, [], batch_id, self.guard_id)
             return
 
         # Newest version per doc as ONE partial aggregation (max_by) —
@@ -446,19 +405,15 @@ class PostingsIndexMaintainer:
             .select("doc_id", "lsn", "deleted", "t", "f", "dl")
         )
         untouched = old.join(fresh.select("doc_id"), "doc_id", "left_anti")
-        new_state = (
-            untouched.unionByName(replacement)
-            .withColumn("bucket", bucket)
-            .localCheckpoint(eager=True)
+        new_state = untouched.unionByName(replacement).withColumn("bucket", bucket)
+        self.state.commit(
+            new_state, [(int(b),) for b in batch_buckets], batch_id, self.guard_id
         )
-        new_state.write.mode("overwrite").partitionBy("bucket").parquet(self.path)
-        self._has_state = True
-        mark_applied(self.work, batch_id, self.guard_id)
 
     def live_postings(self) -> DataFrame:
         """(doc_id, t, f, dl) for live documents (marker rows excluded)."""
         return (
-            self.spark.read.parquet(self.path)
+            self.state.read(self._SCHEMA)
             .filter(~F.col("deleted") & F.col("t").isNotNull())
             .select("doc_id", "t", "f", "dl")
         )

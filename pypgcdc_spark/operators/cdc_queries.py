@@ -219,7 +219,7 @@ def cdc_incremental_view(spark, sf_dir):
     (maxFilesPerTrigger=1).  The maintenance kernel is
     ``operators/ivm.py::BucketedViewMaintainer``: key state is ONE parquet
     dataset hash-partitioned by ``user_id % n_buckets`` and each batch
-    rewrites only its touched buckets via dynamic partition overwrite —
+    rewrites only its touched buckets under a manifest commit —
     per-batch I/O is O(touched buckets), not O(total keys) (the round-2
     verdict's perf-weak item; the 1-bucket-batch→1-bucket-rewrite pin
     lives in tests/test_plans.py).  The final aggregate must hash-match

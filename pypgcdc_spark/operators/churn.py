@@ -34,12 +34,12 @@ This module provides the shared pieces the sinks use to apply that rule
   half a million files — during bulk loads rewriting most of state is
   genuinely unavoidable and bucket count is irrelevant to row I/O).
 
-Consumers: ``cdc/apply.DeleteAwareMerger`` (auto mode),
-``operators/ivm.BucketedViewMaintainer``,
-``operators/join_ivm.JoinViewMaintainer`` and the soak harness's
-manifest-state maintainer — each rebuckets through its own
-crash-atomic relayout path when the recommendation crosses its current
-count.
+Consumers: ``cdc/apply.DeleteAwareMerger`` (auto mode), which relays
+its public table through ``operators/relayout.py``'s staged swap, and
+the manifest-state maintainers — ``operators/ivm.BucketedViewMaintainer``,
+``operators/join_ivm.JoinViewMaintainer`` and the soak harness's — which
+relay through ``ManifestState.replace_all``.  :func:`layout_record` is
+the one layout record all of them persist.
 """
 
 from __future__ import annotations
@@ -105,6 +105,15 @@ class ChurnEwma:
         else:
             self.value = self.alpha * k + (1.0 - self.alpha) * self.value
         return self.value
+
+
+def layout_record(n_buckets: int, churn: ChurnEwma) -> dict:
+    """The persisted bucket layout: count plus keys-EWMA (when observed),
+    so a restarted sink resumes both."""
+    rec = {"n_buckets": int(n_buckets)}
+    if churn.value is not None:
+        rec["keys_ewma"] = float(churn.value)
+    return rec
 
 
 def recommend_buckets(

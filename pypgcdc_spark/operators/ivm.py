@@ -10,27 +10,26 @@ Scale design (the round-2 verdict's one perf-weak item was the previous
 full-state rewrite per micro-batch; round 6 cut the per-batch fixed cost
 to three Spark actions):
 
-* Key state lives in ONE parquet dataset partitioned by
-  ``bucket = user_id % n_buckets``.  Each micro-batch rewrites only the
-  buckets its keys fall into, via dynamic partition overwrite
-  (``spark.sql.sources.partitionOverwriteMode=dynamic``) — write
+* Key state lives in ONE manifest-committed parquet dataset partitioned
+  by ``bucket = user_id % n_buckets`` (operators/atomic_state.py).  Each
+  micro-batch stages new contents for only the buckets its keys fall
+  into, and one manifest rename swaps exactly those buckets in — write
   amplification is O(touched buckets × bucket size), not O(total keys).
   At 100 TB key state the same layout maps 1:1 onto a lake-table
-  ``MERGE INTO`` target (Delta/Iceberg bucket clustering); parquet +
-  dynamic overwrite is the dependency-free stand-in with the same I/O
-  shape.
+  ``MERGE INTO`` target (Delta/Iceberg bucket clustering).
 * Reads prune to the touched buckets via a static ``isin`` partition
   filter from the batch's collected bucket ids — bounded metadata
   (≤ n_buckets ints).  DPP does not fire on the broadcast-join
   alternative, which silently scanned all of state (state_prune.py).
-* The whole delta step evaluates as ONE full-outer join W of the
-  batch's newest-per-key rows against the old bucket state, which
-  materializes exactly once (``localCheckpoint`` — also severing
-  read-own-write lineage on the state path); the new bucket contents,
-  and the retract/add delta fold, are narrow projections of W.
+* The whole delta step evaluates as ONE aggregation W of the batch's
+  newest-per-key rows against the old bucket state, which materializes
+  exactly once (``localCheckpoint``); the new bucket contents, and the
+  retract/add delta fold, are narrow projections of W.
 * The derived aggregate is event-types × counters — metadata-sized — so
-  it lives as driver rows (one bounded collect per batch), not as
-  per-batch parquet versions.
+  it is one bounded collect per batch, committed in the manifest with
+  the key state, the replay guard and the bucket layout: a restarted
+  maintainer resumes all of them, and a crash before the manifest
+  rename re-applies the batch against the old state.
 
 Guards a real IVM needs, both fixture-exercised: an LSN monotonicity check
 rejects stale versions arriving out of order, and deletes leave TOMBSTONES
@@ -39,8 +38,6 @@ in key state so a late stale update cannot resurrect a deleted key.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,26 +45,6 @@ KEY_SCHEMA = (
     "user_id LONG, lsn LONG, event_type STRING, cents LONG, is_deleted BOOLEAN"
 )
 AGG_SCHEMA = "event_type STRING, n_keys LONG, total_cents LONG"
-
-
-def _dataset_exists(path: str) -> bool:
-    """True if the state dir holds committed parquet (not just sidecars)."""
-    for root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
-
-
-def _dataset_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                try:
-                    total += os.path.getsize(os.path.join(root, fn))
-                except OSError:
-                    pass
-    return total
 
 
 class BucketedViewMaintainer:
@@ -89,19 +66,22 @@ class BucketedViewMaintainer:
         guard_id: str = None,
         target_bucket_bytes: int = None,
     ):
+        from pypgcdc_spark.operators.atomic_state import ManifestState
         from pypgcdc_spark.operators.churn import (
             MIN_CHURN_BUCKET_BYTES,
             ChurnEwma,
         )
 
         self.spark = spark
-        self.work = work_dir
         # Stream-lineage identity for the replay guard (conventionally the
         # checkpoint path): batch ids reset to 0 under a fresh checkpoint,
         # so the durable high-water is only meaningful within one lineage
-        # (ADVICE r8; see batch_guard module docstring).
+        # (ADVICE r8; see ManifestState.already_applied).
         self.guard_id = guard_id
-        self.key_path = f"{work_dir}/key_state"
+        # Key state, batch marker, aggregate rows and bucket layout commit
+        # as ONE manifest rename, so all of them survive a restart.
+        self.state = ManifestState(spark, f"{work_dir}/key_state", ["bucket"])
+        self._agg_rows: list = [tuple(r) for r in self.state.extra("agg", [])]
         self.auto = n_buckets == "auto"
         self.target_bucket_bytes = target_bucket_bytes or self.TARGET_BUCKET_BYTES
         #: churn-rate EWMA driving auto growth (operators/churn.py — the
@@ -110,90 +90,40 @@ class BucketedViewMaintainer:
         #: churn growth never pushes the mean bucket below this (tunable).
         self.min_churn_bucket_bytes = MIN_CHURN_BUCKET_BYTES
         self.rebucket_events: list = []
-        self._relayout_fault = None  # test-only crash injection point
         if self.auto:
-            from pypgcdc_spark.operators.relayout import (
-                load_layout,
-                recover_relayout,
-            )
-
-            recover_relayout(self.key_path)
-            layout = load_layout(self.key_path)
-            if layout:
-                self.n_buckets = int(layout["n_buckets"])
-                if layout.get("keys_ewma") is not None:
-                    self._churn.value = float(layout["keys_ewma"])
-            else:
-                self.n_buckets = self.MIN_BUCKETS
+            layout = self.state.extra("layout", None) or {}
+            self.n_buckets = int(layout.get("n_buckets", self.MIN_BUCKETS))
+            if layout.get("keys_ewma") is not None:
+                self._churn.value = float(layout["keys_ewma"])
         else:
             self.n_buckets = n_buckets
-        self._has_keys = _dataset_exists(self.key_path)
-        self._agg_rows: list = []
+
+    def _extras(self, agg_rows, n_buckets=None) -> dict:
+        from pypgcdc_spark.operators.churn import layout_record
+
+        extra = {"agg": [list(r) for r in agg_rows]}
+        if self.auto:
+            extra["layout"] = layout_record(n_buckets or self.n_buckets, self._churn)
+        return extra
 
     # -- state accessors ------------------------------------------------
 
-    def _read_keys(self, bucket_ids: list) -> DataFrame:
-        if not self._has_keys:
-            return self.spark.createDataFrame([], KEY_SCHEMA)
-        # Static partition pruning from the batch's collected bucket ids
-        # (bounded metadata): only the touched buckets are listed and
-        # scanned.  The broadcast-join idiom this replaces depended on
-        # dynamic partition pruning, which does not fire on this plan
-        # shape (ADVICE r7; see state_prune.py).
-        from pypgcdc_spark.operators.state_prune import prune_buckets
-
-        return prune_buckets(self.spark.read.parquet(self.key_path), bucket_ids).drop(
-            "bucket"
-        )
-
-    def _read_agg(self) -> DataFrame:
-        return self.spark.createDataFrame(self._agg_rows, AGG_SCHEMA)
-
     def aggregate(self) -> DataFrame:
-        return self._read_agg().filter(F.col("n_keys") > 0)
+        return self.spark.createDataFrame(self._agg_rows, AGG_SCHEMA).filter(
+            F.col("n_keys") > 0
+        )
 
     # -- the per-batch delta step ---------------------------------------
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pypgcdc_spark.operators.batch_guard import already_applied, mark_applied
+        from pypgcdc_spark.operators.join_ivm import delta_step_conf
 
-        if already_applied(self.work, batch_id, self.guard_id):
+        if self.state.already_applied(batch_id, self.guard_id):
             return  # foreachBatch replay (at-least-once): already committed
-        conf = self.spark.conf
-        saved = {
-            k: conf.get(k)
-            for k in (
-                "spark.sql.shuffle.partitions",
-                "spark.sql.join.preferSortMergeJoin",
-                "spark.sql.adaptive.enabled",
-            )
-        }
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # Per-batch data is bucket-sized: right-size the tiny shuffles and
-        # prefer shuffled-hash joins (no sort) for the delta step.  Capped
-        # — churn-sized layouts run to tens of thousands of buckets, but
-        # the shuffle carries only the touched rows (~12% of state at the
-        # default churn factor), not one partition per bucket.
-        # Deliberately NOT floored at defaultParallelism: A/B'd r12
-        # (paired, min-of-3) and the wider shuffle was 5-15% SLOWER across
-        # all three IVM gate rows — per-batch data is far too small to
-        # amortize the extra task scheduling.
-        conf.set("spark.sql.shuffle.partitions", str(min(self.n_buckets, 64)))
-        conf.set("spark.sql.join.preferSortMergeJoin", "false")
-        # AQE off for the delta step: the shuffle width is already sized
-        # to the bucket count above, the one aggregation has no join for
-        # skew handling to rewrite, and AQE's per-stage materialize +
-        # replan barrier is pure latency on a micro-batch (measured r12:
-        # ~0.7 s over a 4-batch drain, results identical).
-        conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            self._apply(batch_df)
-            mark_applied(self.work, batch_id, self.guard_id)
-        finally:
-            for k, v in saved.items():
-                conf.set(k, v)
+        with delta_step_conf(self.spark, self.n_buckets):
+            self._apply(batch_df, batch_id)
 
-    def _apply(self, batch_df: DataFrame) -> None:
+    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         bucket = F.pmod(F.col("user_id"), F.lit(self.n_buckets)).cast("int")
         from pypgcdc_spark.operators.churn import touched_buckets_and_keys
 
@@ -201,15 +131,17 @@ class BucketedViewMaintainer:
         # batch's distinct-key count — the churn observation that drives
         # auto bucket growth (operators/churn.py).  This collect doubles
         # as the empty-batch probe (idle micro-batches are normal on a
-        # live feed): an empty bucket list means zero rows, and returning
-        # before any write also keeps a zero-row dynamic overwrite from
-        # leaving a fileless state dir that flips _has_keys early.  The
-        # separate batch_df.isEmpty() action this replaces cost one extra
-        # Spark job per micro-batch.
+        # live feed): an empty bucket list means zero rows, and a
+        # marker-only manifest commit advances the high-water without
+        # staging data.  The separate batch_df.isEmpty() action this
+        # replaces cost one extra Spark job per micro-batch.
         batch_buckets, batch_keys = touched_buckets_and_keys(
             batch_df, bucket, F.col("user_id")
         )
         if not batch_buckets:
+            self.state.finalize(
+                None, [], batch_id, self.guard_id, extra=self._extras(self._agg_rows)
+            )
             return
         if self.auto:
             self._churn.observe(batch_keys)
@@ -224,7 +156,10 @@ class BucketedViewMaintainer:
         # exactly once (localCheckpoint — a persist would let the delta
         # fold and the state write race the first cache fill) and severs
         # lineage on the state path.
-        old = self._read_keys(batch_buckets)
+        old = self.state.read(
+            "bucket INT, " + KEY_SCHEMA,
+            F.col("bucket").isin([int(b) for b in batch_buckets]),
+        ).drop("bucket")
         tall = old.select(
             "user_id",
             F.lit("O").alias("src"),
@@ -261,99 +196,30 @@ class BucketedViewMaintainer:
             F.col("new.event_type").alias("new_type"),
             F.col("new.cents").alias("new_cents"),
             F.col("new.is_deleted").alias("new_deleted"),
-        )
-        # The per-type delta fold rides W's checkpoint job via observe()
-        # — one Spark job fewer per batch (VERDICT r12 next-round #4).
-        # observe() computes scalar aggregates only, so the fold is
-        # conditional sums over the event types KNOWN at plan time (the
-        # maintained aggregate's current rows); a counter of contributions
-        # outside that set guards the fast path — a batch introducing a
-        # new (or NULL) type falls back to the exact collect job below.
-        # CollectMetrics evaluates its aggregates INTERPRETED (no codegen):
-        # the per-row conditional logic lives in codegen'd projection
-        # columns and the metrics are plain sums of those, pruned again
-        # right after observe() so the checkpoint never materializes them.
-        # Driver-cost discipline: indicators/metrics build as SQL strings
-        # (one py4j call each, parsed JVM-side) — Column algebra cost
-        # ~0.5 s/batch of py4j + re-analysis (OPTIMIZATION_r13.md §4).
-        from pyspark.sql import Observation
+        ).localCheckpoint(eager=True)
 
-        known = sorted({r[0] for r in self._agg_rows if r[0] is not None})
-        obs = Observation()
-        core = [
-            "user_id", "eff", "lsn", "event_type", "cents", "is_deleted",
-            "new_lsn", "new_type", "new_cents", "new_deleted",
-        ]
-        ret_sql = "eff AND lsn IS NOT NULL AND NOT is_deleted"
-        add_sql = "eff AND NOT new_deleted"
-        qt = lambda t: "'" + str(t).replace("'", "''") + "'"  # noqa: E731
-        if known:
-            known_sql = ", ".join(qt(t) for t in known)
-            unk = (
-                f"CASE WHEN ({ret_sql}) AND (event_type IS NULL "
-                f"OR event_type NOT IN ({known_sql})) THEN 1 "
-                f"WHEN ({add_sql}) AND (new_type IS NULL "
-                f"OR new_type NOT IN ({known_sql})) THEN 1 ELSE 0 END"
-            )
-        else:
-            unk = f"CASE WHEN ({ret_sql}) OR ({add_sql}) THEN 1 ELSE 0 END"
-        indicators = [F.expr(f"{unk} AS _unk")]
-        for i, t in enumerate(known):
-            indicators.append(F.expr(
-                f"coalesce(CASE WHEN ({ret_sql}) AND event_type = {qt(t)} "
-                f"THEN CAST(-1 AS BIGINT) END, CAST(0 AS BIGINT))"
-                f" + coalesce(CASE WHEN ({add_sql}) AND new_type = {qt(t)} "
-                f"THEN CAST(1 AS BIGINT) END, CAST(0 AS BIGINT)) AS _dk{i}"
-            ))
-            indicators.append(F.expr(
-                f"coalesce(CASE WHEN ({ret_sql}) AND event_type = {qt(t)} "
-                f"THEN -cents END, CAST(0 AS BIGINT))"
-                f" + coalesce(CASE WHEN ({add_sql}) AND new_type = {qt(t)} "
-                f"THEN new_cents END, CAST(0 AS BIGINT)) AS _dc{i}"
-            ))
-        metrics = [F.expr("sum(_unk)").alias("unknown")]
-        for i in range(len(known)):
-            metrics.append(F.expr(f"sum(_dk{i})").alias(f"dk{i}"))
-            metrics.append(F.expr(f"sum(_dc{i})").alias(f"dc{i}"))
-        w = (
-            w.select("*", *indicators)
-            .observe(obs, *metrics)
-            .select(*core)
-            .localCheckpoint(eager=True)
+        # Retract/add deltas per type (bounded collect: types × counters),
+        # folded into the aggregate on the driver (join_ivm.fold_deltas).
+        # W is small per batch and already materialized, so one task folds
+        # it — a shuffle's fixed cost outweighs its parallelism here.
+        retract = w.filter(
+            F.col("eff") & F.col("lsn").isNotNull() & ~F.col("is_deleted")
+        ).select(
+            "event_type",
+            F.lit(-1).cast("long").alias("n_keys"),
+            (-F.col("cents")).alias("total_cents"),
         )
-        got = obs.get  # the eager checkpoint already ran the job
-        fold_fast = not got["unknown"]
-        if fold_fast:
-            by_t = {r[0]: (int(r[1]), int(r[2])) for r in self._agg_rows}
-            for i, t in enumerate(known):
-                n0, c0 = by_t.get(t, (0, 0))
-                by_t[t] = (n0 + int(got[f"dk{i}"] or 0), c0 + int(got[f"dc{i}"] or 0))
-            folded_rows = sorted((t, n, c) for t, (n, c) in by_t.items())
-
-        # Retract/add delta fold (bounded collect: types × counters) —
-        # only built when the observe fast path could not cover the batch.
-        agg = None
-        if not fold_fast:
-            retract = w.filter(F.expr(ret_sql)).select(
-                "event_type",
-                F.lit(-1).cast("long").alias("n_keys"),
-                (-F.col("cents")).alias("total_cents"),
-            )
-            add = w.filter(F.expr(add_sql)).select(
-                F.col("new_type").alias("event_type"),
-                F.lit(1).cast("long").alias("n_keys"),
-                F.col("new_cents").alias("total_cents"),
-            )
-            agg = (
-                self._read_agg()
-                .unionByName(retract)
-                .unionByName(add)
-                .groupBy("event_type")
-                .agg(
-                    F.sum("n_keys").alias("n_keys"),
-                    F.sum("total_cents").alias("total_cents"),
-                )
-            )
+        add = w.filter(F.col("eff") & ~F.col("new_deleted")).select(
+            F.col("new_type").alias("event_type"),
+            F.lit(1).cast("long").alias("n_keys"),
+            F.col("new_cents").alias("total_cents"),
+        )
+        deltas = (
+            retract.unionByName(add)
+            .coalesce(1)
+            .groupBy("event_type")
+            .agg(F.sum("n_keys"), F.sum("total_cents"))
+        )
         # New contents of the TOUCHED buckets: applied after-images where
         # the guard passed (deletes stay as tombstones), old rows
         # otherwise — survivors ride through the same W.
@@ -373,69 +239,48 @@ class BucketedViewMaintainer:
             .alias("is_deleted"),
             bucket.alias("bucket"),
         )
-        # Dynamic overwrite: only partitions present in new_state (= the
-        # touched buckets — every touched key yields a row, tombstones
-        # included) are replaced; all other buckets are untouched on disk.
-        # The delta fold and the write both stream from checkpointed W
-        # blocks — concurrent Spark jobs.
-        from pypgcdc_spark.operators.join_ivm import _concurrently
+        # Commit: every touched key yields a row (tombstones included), so
+        # the staged attempt holds the full new contents of exactly the
+        # touched buckets; all other buckets keep their live files.  The
+        # delta fold and the staging write both stream from checkpointed
+        # W blocks — concurrent Spark jobs — and the manifest rename then
+        # commits state, batch marker and aggregate together.
+        from pypgcdc_spark.operators.join_ivm import _concurrently, fold_deltas
 
-        # Repartition by the bucket column before the partitioned write:
-        # without it every shuffle task holds rows of EVERY touched
-        # bucket, so the write emits tasks x buckets files — measured
-        # 137.8s for a 2048-dir dynamic overwrite vs 10.8s with one file
-        # per bucket dir (r12 dir-cost probe).  The extra shuffle moves
-        # only the touched rows.
-        write_state = (
-            lambda: new_state.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(self.key_path)
+        staged: list = []
+        rows = fold_deltas(
+            self._agg_rows,
+            _concurrently(
+                lambda: deltas.collect(),
+                lambda: staged.append(self.state.stage(new_state, batch_id)),
+            ),
         )
-        if fold_fast:
-            # Fold already observed on W's checkpoint job: the only
-            # remaining Spark job this batch is the state write.
-            write_state()
-            self._agg_rows = [tuple(r) for r in folded_rows]
-        else:
-            self._agg_rows = [
-                (r.event_type, r.n_keys, r.total_cents)
-                for r in _concurrently(lambda: agg.collect(), write_state)
-            ]
-        self._has_keys = os.path.isdir(self.key_path)
+        self.state.finalize(
+            staged[0],
+            [(int(b),) for b in batch_buckets],
+            batch_id,
+            self.guard_id,
+            extra=self._extras(rows),
+        )
+        self._agg_rows = rows
         if self.auto:
-            from pypgcdc_spark.operators.relayout import save_layout
-
-            save_layout(self.key_path, self._layout_record())
-            self._maybe_rebucket()
+            self._maybe_rebucket(batch_id)
 
     # -- churn-adaptive relayout (auto mode) ----------------------------
 
-    def _layout_record(self) -> dict:
-        rec = {"n_buckets": int(self.n_buckets)}
-        if self._churn.value is not None:
-            rec["keys_ewma"] = float(self._churn.value)
-        return rec
-
-    def _fault(self, point: str) -> None:
-        if self._relayout_fault == point:
-            raise RuntimeError(f"injected relayout crash at {point}")
-
-    def _maybe_rebucket(self) -> None:
+    def _maybe_rebucket(self, batch_id: int) -> None:
         """Auto mode: grow the bucket count when the byte target OR the
         churn rule (buckets >= factor x keys/batch EWMA) demands it, then
-        relay the whole key state once, crash-atomically
-        (operators/relayout.py — stage, marker last, two-rename swap).
-        The bucket is a pure function of the stored ``user_id``, so the
-        relaid rows are bit-identical; only partition assignment moves."""
+        relay the whole key state through ONE manifest swap
+        (``replace_all``), committed under the same batch id — a crash
+        mid-relayout leaves the old generation live.  The bucket is a
+        pure function of the stored ``user_id``, so the relaid rows are
+        bit-identical; only partition assignment moves."""
         from pypgcdc_spark.operators.churn import recommend_buckets
-        from pypgcdc_spark.operators.relayout import staged_relayout
 
-        if not self._has_keys:
-            return
         new_n = recommend_buckets(
             self.n_buckets,
-            _dataset_bytes(self.key_path),
+            self.state.live_bytes(),
             self.target_bucket_bytes,
             self._churn.value,
             min_buckets=self.MIN_BUCKETS,
@@ -443,17 +288,11 @@ class BucketedViewMaintainer:
         )
         if new_n == self.n_buckets:
             return
-        rec = self._layout_record()
-        rec["n_buckets"] = int(new_n)
-        staged_relayout(
-            self.spark,
-            self.key_path,
-            "bucket",
-            lambda df: df.withColumn(
-                "bucket", F.pmod(F.col("user_id"), F.lit(new_n)).cast("int")
-            ),
-            rec,
-            fault=self._fault,
+        relaid = self.state.read("bucket INT, " + KEY_SCHEMA).withColumn(
+            "bucket", F.pmod(F.col("user_id"), F.lit(new_n)).cast("int")
+        )
+        self.state.replace_all(
+            relaid, batch_id, self.guard_id, extra=self._extras(self._agg_rows, new_n)
         )
         self.rebucket_events.append((self.n_buckets, new_n))
         self.n_buckets = new_n

@@ -23,11 +23,11 @@ revision — the retract path.  Per-key LSN guards make the maintainer
 tolerant of the cross-chunk LSN disorder hash-chunking creates.
 
 Scale design (same discipline as operators/ivm.py): A- and B-state live
-in parquet datasets partitioned by ``bucket = orderkey % N_BUCKETS``;
-each batch rewrites only touched buckets via dynamic partition
-overwrite and reads them partition-pruned, so per-batch cost is
-O(touched buckets), not O(state).  The joined aggregate is priorities ×
-counters — metadata-sized.  Insert/update scope; the delete/tombstone
+in one manifest-committed parquet dataset partitioned by ``(tbl,
+bucket = orderkey % N_BUCKETS)`` (operators/atomic_state.py); each batch
+replaces only the touched partitions and reads them partition-pruned,
+so per-batch cost is O(touched buckets), not O(state).  The joined
+aggregate is priorities × counters — metadata-sized.  Insert/update scope; the delete/tombstone
 machinery is demonstrated by ivm.py and cdc_targeted_erasure.
 
 Reference parity: the reference (pypgcdc, ``reader.py:104``) replays
@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -76,6 +77,48 @@ def _concurrently(collect_fn, write_fn):
     if err:
         raise err[0]
     return rows
+
+
+def fold_deltas(agg_rows, deltas) -> list:
+    """The maintained aggregate plus one batch's per-key ``(key, n,
+    cents)`` deltas, summed on the driver — both sides are metadata-sized
+    (keys × counters), and folding them here keeps the old rows out of
+    the Spark job (a local-data scan costs a Python worker round trip
+    per batch).  A NULL key is an ordinary key."""
+    acc = {r[0]: (int(r[1] or 0), int(r[2] or 0)) for r in agg_rows}
+    for k, n, c in deltas:
+        n0, c0 = acc.get(k, (0, 0))
+        acc[k] = (n0 + int(n or 0), c0 + int(c or 0))
+    return [(k, n, c) for k, (n, c) in acc.items()]
+
+
+@contextmanager
+def delta_step_conf(spark: SparkSession, n_buckets: int):
+    """Session conf for one maintainer delta step, restored on exit.
+
+    Per-batch data is bucket-sized: right-size the tiny shuffles to the
+    bucket count and prefer shuffled-hash joins (no sort).  Capped —
+    churn-sized layouts run to tens of thousands of buckets, but the
+    shuffle carries only the touched rows.  Deliberately NOT floored at
+    defaultParallelism: A/B'd r12 (paired, min-of-3) and the wider
+    shuffle was 5-15% SLOWER across all three IVM gate rows.  AQE off:
+    the shuffle width is already sized, and AQE's per-stage materialize
+    + replan barrier is pure latency on a micro-batch (measured r12:
+    ~0.7 s over a 4-batch drain, results identical)."""
+    conf = spark.conf
+    settings = {
+        "spark.sql.shuffle.partitions": str(min(n_buckets, 64)),
+        "spark.sql.join.preferSortMergeJoin": "false",
+        "spark.sql.adaptive.enabled": "false",
+    }
+    saved = {k: conf.get(k) for k in settings}
+    for k, v in settings.items():
+        conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            conf.set(k, v)
 
 A_SCHEMA = "lsn LONG, tbl STRING, orderkey LONG, linenumber LONG, custkey LONG, priority STRING, cents LONG"
 
@@ -167,16 +210,16 @@ class JoinViewMaintainer:
       reuses the orderkey hash partitioning, and W materializes exactly
       once per batch (``localCheckpoint`` — which also severs
       read-own-write lineage on the state path it came from);
-    * A-rows and B-sums state live in ONE parquet dataset partitioned by
-      ``(tbl, bucket)``; a batch commits with a single
-      dynamic-partition-overwrite write of narrow projections of the
-      checkpointed W — only the touched partitions are replaced;
+    * A-rows and B-sums state live in ONE manifest-committed parquet
+      dataset partitioned by ``(tbl, bucket)``; a batch stages narrow
+      projections of the checkpointed W and one manifest rename replaces
+      exactly the touched partitions;
     * state reads prune buckets via a static ``isin`` partition filter
       from the batch's collected bucket ids (bounded metadata; DPP does
       not fire on the broadcast-join shape — state_prune.py);
     * the maintained aggregate is priorities × counters — metadata-sized
-      — so it lives as driver rows (one bounded collect per batch), not
-      as per-batch parquet versions;
+      — so it is one bounded collect per batch, committed as manifest
+      extras, not as per-batch parquet versions;
     * B-state is the per-orderkey partial aggregate ``(b_n, b_cents)``
       the delta join actually consumes — group-aggregate IVM state,
       bounded by #orders, not #lines; raw-line state would only be
@@ -208,16 +251,14 @@ class JoinViewMaintainer:
         )
 
         self.spark = spark
-        self.work = work_dir
         # Stream-lineage identity for the replay guard (checkpoint path):
         # batch ids reset under a fresh checkpoint (ADVICE r8).
         self.guard_id = guard_id
         # State + batch marker + aggregate rows commit as ONE atomic
         # manifest rename (r8 verdict task 3): the B-side fold is per-order
-        # SUMS, so the crash-between-state-and-marker window of the plain
-        # batch_guard protocol would double-count a replayed delta-B.
-        # The manifest also makes the aggregate restart-durable (it was
-        # driver memory before).
+        # SUMS, so a crash window between state and marker would
+        # double-count a replayed delta-B.  The manifest also makes the
+        # aggregate restart-durable.
         self.state = ManifestState(spark, f"{work_dir}/state", ["tbl", "bucket"])
         self._agg_rows: list = [
             tuple(r) for r in self.state.extra("agg", [])
@@ -240,16 +281,12 @@ class JoinViewMaintainer:
         else:
             self.n_buckets = n_buckets
 
-    def _layout_record(self) -> dict:
-        rec = {"n_buckets": int(self.n_buckets)}
-        if self._churn.value is not None:
-            rec["keys_ewma"] = float(self._churn.value)
-        return rec
+    def _extras(self, agg_rows, n_buckets=None) -> dict:
+        from pypgcdc_spark.operators.churn import layout_record
 
-    def _extras(self, agg_rows) -> dict:
         extra = {"agg": [list(r) for r in agg_rows]}
         if self.auto:
-            extra["layout"] = self._layout_record()
+            extra["layout"] = layout_record(n_buckets or self.n_buckets, self._churn)
         return extra
 
     def _maybe_rebucket(self, batch_id: int) -> None:
@@ -274,18 +311,16 @@ class JoinViewMaintainer:
         relaid = self.state.read(self.STATE_SCHEMA).withColumn(
             "bucket", (F.col("orderkey") % new_n).cast("int")
         )
-        old_n = self.n_buckets
-        self.n_buckets = new_n
         self.state.replace_all(
-            relaid, batch_id, self.guard_id, extra=self._extras(self._agg_rows)
+            relaid, batch_id, self.guard_id, extra=self._extras(self._agg_rows, new_n)
         )
-        self.rebucket_events.append((old_n, new_n))
-
-    def _read_agg(self) -> DataFrame:
-        return self.spark.createDataFrame(self._agg_rows, self.AGG_SCHEMA)
+        self.rebucket_events.append((self.n_buckets, new_n))
+        self.n_buckets = new_n
 
     def aggregate(self) -> DataFrame:
-        return self._read_agg().filter(F.col("n_lines") > 0)
+        return self.spark.createDataFrame(self._agg_rows, self.AGG_SCHEMA).filter(
+            F.col("n_lines") > 0
+        )
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # The replay guard is LOAD-BEARING here, not belt-and-braces: the
@@ -297,40 +332,9 @@ class JoinViewMaintainer:
         # between "state committed" and "batch marked".
         if self.state.already_applied(batch_id, self.guard_id):
             return
-        spark = self.spark
-        conf = spark.conf
-        saved = {
-            k: conf.get(k)
-            for k in (
-                "spark.sql.shuffle.partitions",
-                "spark.sql.join.preferSortMergeJoin",
-                "spark.sql.adaptive.enabled",
-            )
-        }
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # Per-batch data is bucket-sized: right-size the tiny shuffles to
-        # the bucket count and prefer shuffled-hash joins (no sort) —
-        # at real scale a deployment sets these to its cluster's shape.
-        # Capped: churn-sized layouts run to tens of thousands of buckets,
-        # but the shuffle carries only the touched rows.  Deliberately NOT
-        # floored at defaultParallelism: A/B'd r12 (paired, min-of-3) and
-        # the wider shuffle was 5-15% SLOWER across all three IVM gate
-        # rows — per-batch data is far too small to amortize the extra
-        # task scheduling.
-        conf.set("spark.sql.shuffle.partitions", str(min(self.n_buckets, 64)))
-        conf.set("spark.sql.join.preferSortMergeJoin", "false")
-        # AQE off for the delta step: shuffle width is already sized to
-        # the bucket count, and AQE's per-stage materialize + replan
-        # barrier is pure latency on a micro-batch (measured r12 on the
-        # sibling BucketedViewMaintainer: ~0.7 s over a 4-batch drain,
-        # results identical).
-        conf.set("spark.sql.adaptive.enabled", "false")
         bucket = (F.col("orderkey") % self.n_buckets).cast("int")
-        try:
+        with delta_step_conf(self.spark, self.n_buckets):
             self._apply(batch_df, bucket, batch_id)
-        finally:
-            for k, v in saved.items():
-                conf.set(k, v)
 
     def _apply(self, batch_df: DataFrame, bucket, batch_id: int) -> None:
         from pypgcdc_spark.operators.churn import touched_buckets_and_keys
@@ -419,89 +423,11 @@ class JoinViewMaintainer:
             F.coalesce("b_cents", F.lit(0)).alias("b_c0"),
             F.coalesce("db_n", F.lit(0)).alias("dn"),
             F.coalesce("db_cents", F.lit(0)).alias("dc"),
-        )
-        # The per-priority delta fold rides W's checkpoint job itself via
-        # observe() — one Spark job fewer per batch (VERDICT r12 next-round
-        # #4; the q15/CC-convergence trick applied to the maintainer).
-        # observe() can only compute scalar aggregates, so the fold is
-        # expressed as conditional sums over the priorities KNOWN at plan
-        # time (the maintained aggregate's current rows); a counter of
-        # delta contributions outside that set (or with a NULL current
-        # priority) guards the fast path — when it fires (first batch, or
-        # a batch introducing a new priority) the fold falls back to the
-        # exact collect job below, so the observe path never has to guess.
-        # CollectMetrics evaluates its aggregates INTERPRETED (no codegen),
-        # so the per-row conditional logic lives in codegen'd projection
-        # columns below W's select and the metrics are plain sums of those
-        # columns; a select right after observe() prunes them again before
-        # the checkpoint materializes (measured: deep when-trees inside the
-        # metrics cost ~0.5 s/batch at sf0.1; as projections they are
-        # noise).
-        # Driver-cost discipline: the whole indicator/metric graph builds
-        # as SQL strings (one py4j call per expression, parsed JVM-side) —
-        # the Column-algebra form cost ~0.5-0.8 s of py4j round-trips and
-        # re-analysis PER BATCH, eating the saved job (measured; see
-        # OPTIMIZATION_r13.md §4).
-        from pyspark.sql import Observation
-
-        known = sorted({r[0] for r in self._agg_rows if r[0] is not None})
-        obs = Observation()
-        core = [
-            "orderkey", "eff", "cur_priority", "cur_custkey", "cur_lsn",
-            "old_priority", "b_n0", "b_c0", "dn", "dc",
-        ]
-        qp = lambda p: "'" + str(p).replace("'", "''") + "'"  # noqa: E731
-        if known:
-            known_sql = ", ".join(qp(p) for p in known)
-            unk = (
-                "CASE WHEN eff AND old_priority IS NOT NULL "
-                f"AND old_priority NOT IN ({known_sql}) THEN 1 "
-                "WHEN eff AND (cur_priority IS NULL "
-                f"OR cur_priority NOT IN ({known_sql})) THEN 1 "
-                "WHEN dn > 0 AND cur_priority IS NOT NULL "
-                f"AND cur_priority NOT IN ({known_sql}) THEN 1 ELSE 0 END"
-            )
-        else:
-            unk = (
-                "CASE WHEN eff THEN 1 "
-                "WHEN dn > 0 AND cur_priority IS NOT NULL THEN 1 ELSE 0 END"
-            )
-        indicators = [F.expr(f"{unk} AS _unk")]
-        for i, p in enumerate(known):
-            indicators.append(F.expr(
-                f"coalesce(CASE WHEN eff AND old_priority = {qp(p)} THEN -b_n0 END, 0)"
-                f" + coalesce(CASE WHEN eff AND cur_priority = {qp(p)} THEN b_n0 END, 0)"
-                f" + coalesce(CASE WHEN dn > 0 AND cur_priority = {qp(p)} THEN dn END, 0)"
-                f" AS _dn{i}"
-            ))
-            indicators.append(F.expr(
-                f"coalesce(CASE WHEN eff AND old_priority = {qp(p)} THEN -b_c0 END, 0)"
-                f" + coalesce(CASE WHEN eff AND cur_priority = {qp(p)} THEN b_c0 END, 0)"
-                f" + coalesce(CASE WHEN dn > 0 AND cur_priority = {qp(p)} THEN dc END, 0)"
-                f" AS _dc{i}"
-            ))
-        metrics = [F.expr("sum(_unk)").alias("unknown")]
-        for i in range(len(known)):
-            metrics.append(F.expr(f"sum(_dn{i})").alias(f"dn{i}"))
-            metrics.append(F.expr(f"sum(_dc{i})").alias(f"dc{i}"))
-        w = (
-            w.select("*", *indicators)
-            .observe(obs, *metrics)
-            .select(*core)
-            .localCheckpoint(eager=True)
-        )
+        ).localCheckpoint(eager=True)
         # W materializes exactly ONCE (a cache/persist would let the
         # union branches below race the first fill and recompute the
         # aggregation concurrently); the checkpoint also severs lineage
-        # on the state path, so the overwrite below is hazard-free.
-        got = obs.get  # checkpoint job already ran — no extra action
-        fold_fast = not got["unknown"]
-        if fold_fast:
-            by_p = {r[0]: (int(r[1]), int(r[2])) for r in self._agg_rows}
-            for i, p in enumerate(known):
-                n0, c0 = by_p.get(p, (0, 0))
-                by_p[p] = (n0 + int(got[f"dn{i}"] or 0), c0 + int(got[f"dc{i}"] or 0))
-            folded_rows = sorted((p, n, c) for p, (n, c) in by_p.items())
+        # on the state path.
 
         a_new = w.filter(F.col("cur_priority").isNotNull()).select(
             "orderkey",
@@ -547,31 +473,20 @@ class JoinViewMaintainer:
                 ),
             ),
         )
-        agg_new = None
-        if not fold_fast:
-            deltas = (
-                w.select(F.explode(contrib).alias("c"))
-                .filter(F.col("c").isNotNull())
-                .select("c.priority", "c.d_n", "c.d_cents")
-                .groupBy("priority")
-                .agg(F.sum("d_n").alias("d_n"), F.sum("d_cents").alias("d_cents"))
-            )
-            agg_new = (
-                self._read_agg()
-                .join(deltas, "priority", "full_outer")
-                .select(
-                    "priority",
-                    (F.coalesce("n_lines", F.lit(0)) + F.coalesce("d_n", F.lit(0))).alias(
-                        "n_lines"
-                    ),
-                    (
-                        F.coalesce("total_cents", F.lit(0)) + F.coalesce("d_cents", F.lit(0))
-                    ).alias("total_cents"),
-                )
-            )
+        # The batch's per-priority deltas (bounded collect: priorities ×
+        # counters).  W is small per batch and already materialized, so
+        # one task folds it — a shuffle's fixed cost outweighs its
+        # parallelism here.
+        deltas = (
+            w.select(F.explode(contrib).alias("c"))
+            .filter(F.col("c").isNotNull())
+            .select("c.priority", "c.d_n", "c.d_cents")
+            .coalesce(1)
+            .groupBy("priority")
+            .agg(F.sum("d_n"), F.sum("d_cents"))
+        )
         # -- single commit: A-rows and B-sums (narrow projections of the
-        # checkpointed W) union into one frame; ONE dynamic partition
-        # overwrite replaces exactly the touched partitions.
+        # checkpointed W) union into one staged frame.
         n = F.lit(None)
         unified = a_new.select(
             F.lit("A").alias("tbl"),
@@ -597,25 +512,20 @@ class JoinViewMaintainer:
         # Commit: staged data is invisible until the manifest swap below —
         # state rows, batch marker AND the new aggregate commit in ONE
         # atomic rename, so a crash anywhere in this function re-applies
-        # the batch against the OLD state (no double-count window).
-        # Fast path (steady batches): the fold already rode W's checkpoint
-        # job, so the only remaining Spark job is the staging write.
-        # Fallback (new/NULL priority seen): the exact delta fold runs as a
-        # bounded collect concurrent with the write, as before.
+        # the batch against the OLD state (no double-count window).  The
+        # delta fold is a bounded collect concurrent with the staging
+        # write (both stream from checkpointed W blocks).
         touched = [(t, b) for t in ("A", "B") for b in batch_buckets]
-        if fold_fast:
-            rows = [tuple(r) for r in folded_rows]
-            staged_one = self.state.stage(unified, batch_id)
-        else:
-            staged: list = []
-            rows = _concurrently(
-                lambda: agg_new.collect(),
+        staged: list = []
+        rows = fold_deltas(
+            self._agg_rows,
+            _concurrently(
+                lambda: deltas.collect(),
                 lambda: staged.append(self.state.stage(unified, batch_id)),
-            )
-            rows = [(r.priority, r.n_lines, r.total_cents) for r in rows]
-            staged_one = staged[0] if staged else None
+            ),
+        )
         self.state.finalize(
-            staged_one,
+            staged[0],
             touched,
             batch_id,
             self.guard_id,

@@ -1,8 +1,9 @@
-"""Crash-atomic relayout of a bucket-partitioned parquet state dataset.
+"""Crash-atomic relayout of a bucket-partitioned parquet table.
 
-The generic form of ``DeleteAwareMerger._maybe_rebucket``'s staged swap
-(cdc/apply.py), for maintainers whose state lives as ONE plain parquet
-dataset partitioned by a bucket column (operators/ivm.py).  Protocol:
+The rebucket protocol of ``cdc/apply.DeleteAwareMerger`` (auto mode),
+whose target is a PUBLIC table — callers read it with
+``spark.read.parquet(target)`` — so it cannot hide behind a manifest.
+Protocol:
 
 * relaid rows are staged into a sibling ``<path>.rebucket`` dir — the
   live dataset is never written in place and stays readable throughout;
@@ -11,10 +12,10 @@ dataset partitioned by a bucket column (operators/ivm.py).  Protocol:
   and gets discarded on recovery);
 * the swap is two renames (live → ``<path>.rebucket.old``, stage →
   live); :func:`recover_relayout` converges every crash window back to
-  exactly one committed generation — same crash matrix as the merger's,
-  pinned there by test_bucketed_merger_rebucket_crashes.
+  exactly one committed generation (pinned at all five fault points by
+  tests/test_rebucket_chaos.py).
 
-ManifestState-backed maintainers don't use this module: their relayout
+The private-state maintainers don't use this module: their relayout
 commits through the manifest protocol itself
 (``ManifestState.replace_all`` — one ``os.replace``, same guarantee).
 """

@@ -19,7 +19,8 @@ The static filter needs a driver collect, but of *bounded metadata*: the
 distinct bucket ids of one micro-batch, ≤ n_buckets ints regardless of
 batch or state size — the same boundedness class as the SQ8 codebook or
 the k-means centroid literals, not a data-sized collect.  That makes the
-static path strictly better here, and it is the one the maintainers use
+static path strictly better here, and it is the one the maintainers use:
+they pass ``F.col("bucket").isin(ids)`` to ``ManifestState.read``
 (``tests/test_plans.py`` pins the pushed partition filter).
 """
 
@@ -35,15 +36,3 @@ def touched_buckets(batch_df: DataFrame, bucket: Column) -> List[int]:
     (≤ n_buckets ints).  Sorted so downstream plans are deterministic."""
     rows = batch_df.select(bucket.alias("bucket")).distinct().collect()
     return sorted(r.bucket for r in rows)
-
-
-def prune_buckets(state_df: DataFrame, bucket_ids: List[int]) -> DataFrame:
-    """Static partition pruning: filter a bucket-partitioned state frame
-    to the touched buckets via an ``isin`` literal — pushed to the file
-    index as ``PartitionFilters``, so untouched partitions are never
-    listed, opened, or scanned."""
-    from pyspark.sql import functions as F
-
-    if not bucket_ids:
-        return state_df.filter(F.lit(False))
-    return state_df.filter(F.col("bucket").isin(bucket_ids))

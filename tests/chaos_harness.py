@@ -56,7 +56,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     from pypgcdc_spark.operators.cdc_dedup import SignatureIndexMaintainer
-    from pypgcdc_spark.operators.ivm import BucketedViewMaintainer
+    from pypgcdc_spark.operators.ivm import KEY_SCHEMA, BucketedViewMaintainer
     from pypgcdc_spark.operators.join_ivm import JoinViewMaintainer
 
     work = tempfile.mkdtemp(prefix="chaos_")
@@ -96,7 +96,10 @@ def main() -> int:
             m.apply_batch(batch, i)
         agg = sorted((r.event_type, r.n_keys, r.total_cents) for r in m.aggregate().collect())
         keys = sorted(
-            (tuple(r) for r in spark.read.parquet(m.key_path).drop("bucket").collect()),
+            (
+                tuple(r)
+                for r in m.state.read("bucket INT, " + KEY_SCHEMA).drop("bucket").collect()
+            ),
             key=repr,
         )
         return agg, keys

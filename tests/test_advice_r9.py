@@ -12,7 +12,7 @@
 3. (low) The foreachBatch replay guard was keyed only by a monotone
    batch id: a fresh-checkpoint restart (ids reset to 0) against an
    existing state dir silently skipped every batch until the new ids
-   passed the old high-water (operators/batch_guard.py).
+   passed the old high-water (now ``ManifestState.already_applied``).
 4. (low) ``_log_identity`` cached ``_log_id`` across a log-recreation
    rewind, stamping new-generation acks with the previous generation's
    identity (sources/pgcdc.py).
@@ -154,29 +154,33 @@ def test_bucketed_merger_truncate_clears_all_buckets(engine, spark, tmp_path):
 # -- 3. replay guard must be lineage-scoped ---------------------------------
 
 
-def test_batch_guard_fresh_checkpoint_not_suppressed(tmp_path):
-    from pypgcdc_spark.operators.batch_guard import already_applied, mark_applied
+def test_batch_guard_fresh_checkpoint_not_suppressed(spark, tmp_path):
+    """The replay guard every maintainer uses is the manifest's batch id:
+    marker-only commits (``finalize`` with nothing staged) exercise it."""
+    from pypgcdc_spark.operators.atomic_state import ManifestState
 
-    work = str(tmp_path)
-    mark_applied(work, 7, run_id="ckpt-A")
+    st = ManifestState(spark, str(tmp_path), ["bucket"])
+    mark_applied = lambda bid, run_id=None: st.finalize(None, [], bid, run_id)  # noqa: E731
+    mark_applied(7, run_id="ckpt-A")
     # Same lineage: replay of batch 7 (and anything below) is suppressed.
-    assert already_applied(work, 7, run_id="ckpt-A")
-    assert already_applied(work, 0, run_id="ckpt-A")
-    assert not already_applied(work, 8, run_id="ckpt-A")
+    assert st.already_applied(7, run_id="ckpt-A")
+    assert st.already_applied(0, run_id="ckpt-A")
+    assert not st.already_applied(8, run_id="ckpt-A")
     # FRESH checkpoint lineage: batch ids restart at 0 and must apply.
-    assert not already_applied(work, 0, run_id="ckpt-B")
-    mark_applied(work, 0, run_id="ckpt-B")
-    assert already_applied(work, 0, run_id="ckpt-B")
-    # Legacy callers (no run_id) keep the plain high-water contract.
-    mark_applied(work, 5)
-    assert already_applied(work, 5)
-    assert not already_applied(work, 6)
+    assert not st.already_applied(0, run_id="ckpt-B")
+    mark_applied(0, run_id="ckpt-B")
+    assert st.already_applied(0, run_id="ckpt-B")
+    # Callers without a run_id keep the plain high-water contract.
+    mark_applied(5)
+    assert st.already_applied(5)
+    assert not st.already_applied(6)
 
 
 def test_maintainer_fresh_checkpoint_applies(spark, tmp_path):
     """End-to-end on a maintainer: after a run under guard A committed
     batches 0..2, a fresh-lineage run (guard B) delivering batch 0 must
-    be APPLIED, not skipped (the r8 bug dropped it silently)."""
+    be APPLIED, not skipped (the r8 bug dropped it silently) — on top of
+    the aggregate the restarted maintainer restored from disk."""
     from pypgcdc_spark.operators.ivm import BucketedViewMaintainer
 
     work = str(tmp_path / "ivm")
@@ -189,8 +193,6 @@ def test_maintainer_fresh_checkpoint_applies(spark, tmp_path):
     assert m1.aggregate().agg(F.sum("n_keys")).collect()[0][0] == 3
 
     m2 = BucketedViewMaintainer(spark, work, n_buckets=2, guard_id="ckpt-B")
-    m2._has_keys = True
-    m2._agg_rows = m1._agg_rows
     df = spark.createDataFrame([ev(100, 50, "click", 2.0)], schema)
     m2.apply_batch(df, 0)  # batch id RESET — must not be treated as replay
     assert m2.aggregate().agg(F.sum("n_keys")).collect()[0][0] == 4

@@ -76,8 +76,6 @@ def test_tombstone_blocks_resurrection(spark, tmp_path):
 
 
 def test_batch_rewrites_only_touched_buckets(spark, tmp_path):
-    import os
-
     maint = SignatureIndexMaintainer(spark, str(tmp_path), n_buckets=4)
     # Seed all four buckets.
     maint.apply_batch(
@@ -87,21 +85,14 @@ def test_batch_rewrites_only_touched_buckets(spark, tmp_path):
         ),
         0,
     )
-    state = f"{tmp_path}/sig_state"
-    mtimes = {
-        b: os.path.getmtime(f"{state}/{b}") for b in os.listdir(state) if b.startswith("bucket=")
-    }
-    assert len(mtimes) == 4
-    # Touch ONLY doc 5 → bucket=1; other bucket dirs must be untouched.
-    import time as _t
-
-    _t.sleep(1.1)
+    # The manifest maps each live bucket to the attempt that wrote it.
+    before = maint.state.load()["partitions"]
+    assert len(before) == 4
+    # Touch ONLY doc 5 → bucket=1; other buckets must keep their attempt.
     maint.apply_batch(_batch(spark, [(100, "I", 5, "a b c d")]), 1)
-    after = {
-        b: os.path.getmtime(f"{state}/{b}") for b in os.listdir(state) if b.startswith("bucket=")
-    }
-    changed = {b for b in after if after[b] != mtimes.get(b)}
-    assert changed == {"bucket=1"}
+    after = maint.state.load()["partitions"]
+    changed = {b for b in after if after[b] != before.get(b)}
+    assert changed == {"1"}
 
 
 def test_postings_index_update_and_delete(spark, tmp_path):

@@ -3,9 +3,8 @@
 The merger's byte-rule auto mode is pinned by test_rebucket_chaos; these
 tests pin the NEW churn rule end-to-end in the three maintainer shapes:
 
-* ``BucketedViewMaintainer(n_buckets="auto")`` — plain-parquet state,
-  crash-atomic relayout via operators/relayout.py;
-* ``JoinViewMaintainer(n_buckets="auto")`` — manifest state, relayout
+* ``BucketedViewMaintainer(n_buckets="auto")`` and
+  ``JoinViewMaintainer(n_buckets="auto")`` — manifest state, relayout
   via ``ManifestState.replace_all`` (one os.replace);
 * ``DeleteAwareMerger`` churn trigger (bytes under target, churn above).
 
@@ -20,7 +19,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from pypgcdc_spark.operators.ivm import AGG_SCHEMA, BucketedViewMaintainer
+from pypgcdc_spark.operators.ivm import KEY_SCHEMA, BucketedViewMaintainer
 
 
 def _event_batch(spark, batch_no: int, n_keys: int = 100):
@@ -36,10 +35,10 @@ def _event_batch(spark, batch_no: int, n_keys: int = 100):
     )
 
 
-def _state_rows(spark, key_path):
+def _state_rows(m):
     return sorted(
         (r.user_id, r.lsn, r.event_type, r.cents, bool(r.is_deleted))
-        for r in spark.read.parquet(key_path).collect()
+        for r in m.state.read("bucket INT, " + KEY_SCHEMA).collect()
     )
 
 
@@ -59,7 +58,7 @@ def test_ivm_auto_grows_on_churn_and_stays_equivalent(spark, tmp_path):
     assert new_n > old_n == 16
     # 100 keys/batch EWMA -> demand next_pow2(800) = 1024, byte-capped.
     assert new_n >= 256
-    assert _state_rows(spark, auto.key_path) == _state_rows(spark, fixed.key_path)
+    assert _state_rows(auto) == _state_rows(fixed)
     assert sorted(map(tuple, auto._agg_rows)) == sorted(map(tuple, fixed._agg_rows))
     # Layout + EWMA persisted: a restarted maintainer resumes both.
     re = BucketedViewMaintainer(spark, str(tmp_path / "a"), n_buckets="auto")
@@ -69,7 +68,51 @@ def test_ivm_auto_grows_on_churn_and_stays_equivalent(spark, tmp_path):
     b3 = _event_batch(spark, 3)
     re.apply_batch(b3, 3)
     fixed.apply_batch(b3, 3)
-    assert _state_rows(spark, re.key_path) == _state_rows(spark, fixed.key_path)
+    assert _state_rows(re) == _state_rows(fixed)
+
+
+
+def _crash_next_relayout(m, point):
+    """Make ``m``'s next relayout (``ManifestState.replace_all``) die at
+    ``point``:
+
+    * ``pre_stage`` — before any relaid row is written;
+    * ``pre_marker`` — relaid rows staged, manifest untouched;
+    * ``pre_swap`` — new manifest written to its temp file, the
+      ``os.replace`` onto the live manifest fails;
+    * ``mid_swap`` — manifest swapped, the maintainer dies before it
+      records the new layout in memory;
+    * ``pre_gc`` — manifest swapped, the sweep of the old generation dies.
+    """
+    st = m.state
+    real_replace_all = st.replace_all
+
+    def boom(*_a, **_k):
+        raise RuntimeError("injected relayout crash")
+
+    def crashing_replace_all(*a, **k):
+        if point == "pre_stage":
+            st.stage = boom
+        elif point == "pre_marker":
+            st.finalize = boom
+        elif point == "pre_gc":
+            st._sweep = boom
+        real_os_replace = os.replace
+
+        def os_replace(src, dst, *ra, **rk):
+            if point == "pre_swap" and dst == st.manifest_path:
+                boom()
+            return real_os_replace(src, dst, *ra, **rk)
+
+        os.replace = os_replace
+        try:
+            real_replace_all(*a, **k)
+        finally:
+            os.replace = real_os_replace
+        if point == "mid_swap":
+            boom()
+
+    st.replace_all = crashing_replace_all
 
 
 @pytest.mark.parametrize(
@@ -77,29 +120,44 @@ def test_ivm_auto_grows_on_churn_and_stays_equivalent(spark, tmp_path):
 )
 def test_ivm_relayout_crash_converges(spark, tmp_path, point):
     """A kill at ANY relayout point converges on restart to exactly one
-    committed generation holding the full state (same crash matrix as the
-    merger's rebucket, pinned there by test_rebucket_chaos)."""
+    committed generation holding the full state: the old layout if the
+    manifest swap had not happened, the new one if it had.  The batch
+    that triggered the relayout stays committed either way, and the
+    restarted maintainer keeps matching a no-crash run."""
+    ctl = BucketedViewMaintainer(spark, str(tmp_path / "ctl"), n_buckets="auto")
+    ctl.min_churn_bucket_bytes = 64  # let a tiny state grow from churn
+    want = []
+    for i in range(3):
+        ctl.apply_batch(_event_batch(spark, i), i)
+        want.append((_state_rows(ctl), sorted(map(tuple, ctl._agg_rows))))
+    assert ctl.rebucket_events, "churn never triggered a relayout"
+    old_n, new_n = ctl.rebucket_events[0]
+
     work = str(tmp_path / f"c_{point}")
     m = BucketedViewMaintainer(spark, work, n_buckets="auto")
     m.min_churn_bucket_bytes = 64
-    m.apply_batch(_event_batch(spark, 0), 0)
-    expected = _state_rows(spark, m.key_path)
-    m._relayout_fault = point
+    assert m.n_buckets == old_n
+    _crash_next_relayout(m, point)
     with pytest.raises(RuntimeError, match="injected relayout crash"):
-        m.apply_batch(_event_batch(spark, 1), 1)
-    # Batch 1's state write committed before the relayout crashed; the
-    # crash must never lose it (or batch 0's rows).
-    m2 = BucketedViewMaintainer(spark, work, n_buckets="auto")
-    rows = _state_rows(spark, m2.key_path)
-    assert set(expected) <= set(rows)
-    assert not os.path.isdir(m2.key_path + ".rebucket")
-    assert not os.path.isdir(m2.key_path + ".rebucket.old")
-    # The recovered maintainer can keep applying (replay of batch 1 is
-    # a no-op per the LSN guard; batch 2 lands normally).
-    m2.apply_batch(_event_batch(spark, 1), 1)
-    m2.apply_batch(_event_batch(spark, 2), 2)
-    assert len(_state_rows(spark, m2.key_path)) >= len(rows)
+        m.apply_batch(_event_batch(spark, 0), 0)
 
+    m2 = BucketedViewMaintainer(spark, work, n_buckets="auto")
+    m2.min_churn_bucket_bytes = 64
+    swapped = point in ("mid_swap", "pre_gc")
+    assert m2.n_buckets == (new_n if swapped else old_n)
+    assert all(int(k) < m2.n_buckets for k in m2.state.load()["partitions"])
+    # The batch's state write committed before the relayout; the crash
+    # must never lose it, whichever generation is live.
+    assert m2.state.already_applied(0)
+    assert (_state_rows(m2), sorted(map(tuple, m2._agg_rows))) == want[0]
+    # Replay of batch 0 is a no-op per the LSN guard; later batches land
+    # normally (relaying first if the crash kept the old layout).
+    m2.apply_batch(_event_batch(spark, 0), 0)
+    assert (_state_rows(m2), sorted(map(tuple, m2._agg_rows))) == want[0]
+    for i in (1, 2):
+        m2.apply_batch(_event_batch(spark, i), i)
+        assert (_state_rows(m2), sorted(map(tuple, m2._agg_rows))) == want[i]
+    assert m2.n_buckets > old_n
 
 def test_manifest_replace_all(spark, tmp_path):
     """replace_all: one atomic manifest swap moves every row to a new

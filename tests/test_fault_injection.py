@@ -1,14 +1,15 @@
-"""Spark-side fault injection for the parquet-state maintainers.
+"""Spark-side fault injection for the manifest-state maintainers.
 
 Round-7 soak killed sockets and the consumer process; these tests kill
 *tasks*: partial task re-runs inside a micro-batch (failing-once UDF
 under ``local[4,3]`` retries, via ``chaos_harness.py`` in a subprocess —
 the shared test session's default maxFailures would abort the job), plus
 the at-least-once hazards Structured Streaming itself creates —
-foreachBatch replaying a whole batch after a failure, and out-of-order /
-duplicate deliveries.  The dynamic-partition-overwrite + tombstone +
-LSN-guard discipline must make all of it idempotent, on all three
-maintainers (MinHash signature index, bucketed IVM, join IVM).
+foreachBatch replaying a whole batch after a failure, a crash at the
+commit point, a restart over an existing state dir, and out-of-order /
+duplicate deliveries.  The manifest commit + tombstone + LSN-guard
+discipline must make all of it idempotent, on all four maintainers
+(bucketed IVM, join IVM, MinHash signature index, postings index).
 
 The negative control (``test_out_of_order_guard_has_teeth``) blinds the
 out-of-order guard and shows the same assertion then FAILS — i.e. these
@@ -21,19 +22,30 @@ import sys
 
 import pytest
 
-from pypgcdc_spark.operators.cdc_dedup import SignatureIndexMaintainer
-from pypgcdc_spark.operators.ivm import BucketedViewMaintainer
+from pypgcdc_spark.operators.cdc_dedup import (
+    PostingsIndexMaintainer,
+    SignatureIndexMaintainer,
+)
+from pypgcdc_spark.operators.ivm import KEY_SCHEMA, BucketedViewMaintainer
 from pypgcdc_spark.operators.join_ivm import A_SCHEMA, JoinViewMaintainer
+
+IVM_SCHEMA = "event_id LONG, user_id LONG, event_type STRING, value DOUBLE"
 
 
 def _sig_batch(spark, rows):
     return spark.createDataFrame(rows, "lsn LONG, op STRING, doc_id LONG, text STRING")
 
 
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
 def _sig_state(maint):
-    return sorted(
-        (tuple(r) for r in maint.spark.read.parquet(maint.path).collect()), key=repr
-    )
+    return _rows(maint.state.read(maint._SCHEMA))
+
+
+def _ivm_keys(iv):
+    return _rows(iv.state.read("bucket INT, " + KEY_SCHEMA))
 
 
 @pytest.mark.slow
@@ -83,14 +95,12 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     iv.apply_batch(ib0, 0)
     iv.apply_batch(ib1, 1)
     agg = sorted((r.event_type, r.n_keys, r.total_cents) for r in iv.aggregate().collect())
-    keys = sorted((tuple(r) for r in spark.read.parquet(iv.key_path).collect()), key=repr)
+    keys = _ivm_keys(iv)
     iv.apply_batch(ib1, 1)  # replay
     assert sorted(
         (r.event_type, r.n_keys, r.total_cents) for r in iv.aggregate().collect()
     ) == agg
-    assert sorted(
-        (tuple(r) for r in spark.read.parquet(iv.key_path).collect()), key=repr
-    ) == keys
+    assert _ivm_keys(iv) == keys
 
     # Join IVM.
     jm = JoinViewMaintainer(spark, str(tmp_path / "join"))
@@ -114,63 +124,179 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     assert jagg == [("HIGH", 2, 1200)]  # both B lines joined, counted once each
 
 
-def test_join_ivm_crash_between_state_and_marker(spark, tmp_path):
-    """The r8 residual window: a crash AFTER the state write but BEFORE
-    the batch marker re-applied one batch on restart, double-counting the
-    join IVM's accumulating B-side.  The manifest protocol removes the
-    window: data staging and marker are ONE atomic rename, so a crash at
-    ANY point inside apply_batch leaves the committed state untouched and
-    the redelivered batch applies against it exactly once.
+# -- one crash matrix for the manifest maintainers -------------------------
+#
+# kind -> (make(spark, dir), batches(spark) -> [b0, b1], view(m) -> rows).
+# The view is the maintained output plus the committed state rows (bucket
+# dropped: a relayout moves rows between buckets, never changes them).
+
+_MATRIX = {
+    "ivm": (
+        lambda spark, d: BucketedViewMaintainer(spark, d, n_buckets=2),
+        lambda spark: [
+            spark.createDataFrame(rows, IVM_SCHEMA)
+            for rows in (
+                [(1, 1, "purchase", 2.0), (2, 2, "view", 1.0)],
+                [(3, 1, "refund", 4.0), (4, 3, "view", 2.0)],
+            )
+        ],
+        lambda m: (
+            _rows(m.aggregate()),
+            _rows(m.state.read("bucket INT, " + KEY_SCHEMA).drop("bucket")),
+        ),
+    ),
+    "join_ivm": (
+        lambda spark, d: JoinViewMaintainer(spark, d),
+        lambda spark: [
+            spark.createDataFrame(
+                [(10, "A", 1, 0, 7, "HIGH", 0), (11, "B", 1, 1, 0, None, 500)], A_SCHEMA
+            ),
+            spark.createDataFrame([(20, "B", 1, 2, 0, None, 700)], A_SCHEMA),
+        ],
+        lambda m: (
+            _rows(m.aggregate()),
+            _rows(m.state.read(m.STATE_SCHEMA).drop("bucket")),
+        ),
+    ),
+    "signatures": (
+        lambda spark, d: SignatureIndexMaintainer(spark, d, n_buckets=2),
+        lambda spark: [
+            _sig_batch(spark, [(10, "I", 1, "alpha beta gamma delta"), (20, "D", 2, None)]),
+            _sig_batch(spark, [(30, "U", 1, "epsilon zeta eta theta"), (31, "I", 3, "a b c")]),
+        ],
+        lambda m: (
+            _rows(m.signatures()),
+            _rows(m.state.read(m._SCHEMA).drop("bucket")),
+        ),
+    ),
+    "postings": (
+        lambda spark, d: PostingsIndexMaintainer(spark, d, n_buckets=2),
+        lambda spark: [
+            _sig_batch(spark, [(10, "I", 1, "spark join fast"), (11, "I", 2, "slow scan")]),
+            _sig_batch(spark, [(20, "U", 1, "fast fast"), (21, "D", 2, None)]),
+        ],
+        lambda m: (
+            _rows(m.live_postings()),
+            _rows(m.state.read(m._SCHEMA).drop("bucket")),
+        ),
+    ),
+}
+
+
+def _boom(*_a, **_k):
+    raise RuntimeError("injected crash before manifest swap")
+
+
+@pytest.mark.parametrize("kind", sorted(_MATRIX))
+def test_manifest_crash_between_state_and_marker(spark, tmp_path, kind):
+    """The r8 residual window, on every manifest maintainer: a crash
+    AFTER the state is written but BEFORE the batch marker would re-apply
+    one batch on restart and double-count an accumulating fold.  Data
+    staging and marker are ONE atomic rename, so a crash anywhere inside
+    apply_batch leaves the committed state untouched.
 
     The crash is injected at the worst spot — after the staged data files
-    are fully on disk, a millisecond before the manifest swap."""
-    jb0 = spark.createDataFrame(
-        [(10, "A", 1, 0, 7, "HIGH", 0), (11, "B", 1, 1, 0, None, 500)], A_SCHEMA
-    )
-    jb1 = spark.createDataFrame([(20, "B", 1, 2, 0, None, 700)], A_SCHEMA)
+    are fully on disk, a millisecond before the manifest swap.  A FRESH
+    maintainer then starts over the same dir (driver state gone — the
+    aggregate must restore from the manifest, not memory), the
+    redelivered batch lands exactly once, and a replay of it is a no-op."""
+    make, batches, view = _MATRIX[kind]
+    b0, b1 = batches(spark)
 
     # Control: the no-crash run.
-    ctl = JoinViewMaintainer(spark, str(tmp_path / "ctl"))
-    ctl.apply_batch(jb0, 0)
-    ctl.apply_batch(jb1, 1)
-    want_agg = sorted(
-        (r.priority, r.n_lines, r.total_cents) for r in ctl.aggregate().collect()
-    )
-    want_state = sorted(
-        (tuple(r) for r in ctl.state.read(ctl.STATE_SCHEMA).collect()), key=repr
-    )
-    assert want_agg == [("HIGH", 2, 1200)]
+    ctl = make(spark, str(tmp_path / "ctl"))
+    ctl.apply_batch(b0, 0)
+    ctl.apply_batch(b1, 1)
+    want = view(ctl)
 
     # Crash run: batch 1 dies between staging and the manifest swap.
-    jm = JoinViewMaintainer(spark, str(tmp_path / "crash"))
-    jm.apply_batch(jb0, 0)
-    real_finalize = jm.state.finalize
-
-    def boom(*a, **k):
-        raise RuntimeError("injected crash before manifest swap")
-
-    jm.state.finalize = boom
+    m = make(spark, str(tmp_path / "crash"))
+    m.apply_batch(b0, 0)
+    committed = view(m)
+    m.state.finalize = _boom
     with pytest.raises(RuntimeError, match="injected crash"):
-        jm.apply_batch(jb1, 1)
-    jm.state.finalize = real_finalize
+        m.apply_batch(b1, 1)
 
-    # "Restart": a FRESH maintainer over the same dir (driver state gone —
-    # the aggregate must restore from the manifest, not memory) sees
-    # batch 1 as NOT applied and the redelivery lands exactly once.
-    jm2 = JoinViewMaintainer(spark, str(tmp_path / "crash"))
-    assert not jm2.state.already_applied(1)
-    jm2.apply_batch(jb1, 1)  # redelivery
-    assert sorted(
-        (r.priority, r.n_lines, r.total_cents) for r in jm2.aggregate().collect()
-    ) == want_agg
-    assert sorted(
-        (tuple(r) for r in jm2.state.read(jm2.STATE_SCHEMA).collect()), key=repr
-    ) == want_state
-    # And a replay of the now-committed batch is still a no-op.
-    jm2.apply_batch(jb1, 1)
-    assert sorted(
-        (r.priority, r.n_lines, r.total_cents) for r in jm2.aggregate().collect()
-    ) == want_agg
+    m2 = make(spark, str(tmp_path / "crash"))
+    assert not m2.state.already_applied(1)
+    assert view(m2) == committed  # the staged attempt stayed invisible
+    m2.apply_batch(b1, 1)  # redelivery
+    assert view(m2) == want
+    m2.apply_batch(b1, 1)  # replay of the now-committed batch
+    assert view(m2) == want
+
+
+# -- restart over an existing state dir --------------------------------------
+
+
+def test_restarted_ivm_keeps_aggregate(spark, tmp_path):
+    """A maintainer restarted over an existing work dir resumes the
+    aggregate it committed (the old driver-memory aggregate came back
+    empty, and the next batch's retract then drove it negative)."""
+    work = str(tmp_path / "ivm")
+    m1 = BucketedViewMaintainer(spark, work, n_buckets=2)
+    m1.apply_batch(
+        spark.createDataFrame(
+            [(1, 1, "purchase", 1.0), (2, 4, "purchase", 2.0),
+             (3, 2, "view", 4.0), (4, 3, "view", 4.0)],
+            IVM_SCHEMA,
+        ),
+        0,
+    )
+    before = _rows(m1.aggregate())
+    assert before == [("purchase", 2, 300), ("view", 2, 800)]
+
+    m2 = BucketedViewMaintainer(spark, work, n_buckets=2)
+    assert _rows(m2.aggregate()) == before
+    m2.apply_batch(spark.createDataFrame([(5, 1, "error", 0.0)], IVM_SCHEMA), 1)
+    assert _rows(m2.aggregate()) == [("purchase", 1, 200), ("view", 2, 800)]
+
+
+@pytest.mark.parametrize(
+    "cls, live",
+    [
+        (SignatureIndexMaintainer, lambda m: m.signatures()),
+        (PostingsIndexMaintainer, lambda m: m.live_postings()),
+    ],
+    ids=["signatures", "postings"],
+)
+def test_restarted_index_keeps_untouched_docs(spark, tmp_path, cls, live):
+    """A restarted index maintainer must merge a batch INTO the bucket's
+    existing rows: with two buckets, docs 1, 3, 5 share bucket 1, and
+    re-indexing doc 5 after a restart must keep docs 1 and 3 (the old
+    in-memory "no state yet" flag overwrote the bucket with doc 5 alone)."""
+    work = str(tmp_path / "idx")
+    m1 = cls(spark, work, n_buckets=2)
+    m1.apply_batch(
+        _sig_batch(spark, [(10 + d, "I", d, f"w{d} x{d} y{d} z{d}") for d in (1, 3, 5)]), 0
+    )
+    m2 = cls(spark, work, n_buckets=2)
+    m2.apply_batch(_sig_batch(spark, [(50, "U", 5, "a new text here")]), 1)
+    assert sorted({r.doc_id for r in live(m2).collect()}) == [1, 3, 5]
+
+
+def test_join_ivm_null_priority_then_steady_batch(spark, tmp_path):
+    """ADVICE r13: an A row with a NULL priority, then a new priority,
+    then a clean B-only batch.  The observe-fold fast path sorted the
+    aggregate's (None, ...) row against str keys and raised TypeError on
+    the third batch; the exact fold applies it.  NULL-priority orders are
+    not stored as A rows, so they join nothing — the recompute over the
+    A rows that carry a priority is HIGH: one 700-cent line."""
+    jm = JoinViewMaintainer(spark, str(tmp_path / "join"))
+    jm.apply_batch(
+        spark.createDataFrame(
+            [(10, "A", 1, None, 7, None, None), (11, "B", 1, 1, None, None, 500)],
+            A_SCHEMA,
+        ),
+        0,
+    )
+    jm.apply_batch(
+        spark.createDataFrame([(20, "A", 2, None, 8, "HIGH", None)], A_SCHEMA), 1
+    )
+    jm.apply_batch(
+        spark.createDataFrame([(21, "B", 2, 1, None, None, 700)], A_SCHEMA), 2
+    )
+    assert _rows(jm.aggregate()) == [("HIGH", 1, 700)]
 
 
 def test_out_of_order_batches_converge(spark, tmp_path):

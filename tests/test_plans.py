@@ -216,19 +216,21 @@ def test_duplicate_spans_no_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in txt
 
 
-def _bucket_listing(key_path):
-    """Per-bucket (filename, mtime) sets of the IVM key-state dataset."""
+def _bucket_listing(state):
+    """Per-bucket live attempt plus its (filename, mtime) set, read through
+    the IVM key-state manifest's partition map."""
     import os
 
     out = {}
-    for d in os.listdir(key_path):
-        if not d.startswith("bucket="):
-            continue
-        full = os.path.join(key_path, d)
-        out[d] = sorted(
-            (f, os.path.getmtime(os.path.join(full, f)))
-            for f in os.listdir(full)
-            if f.endswith(".parquet")
+    for key, b in state.load()["partitions"].items():
+        full = os.path.join(state.data_dir, f"bucket={key}", f"_b={b}")
+        out[key] = (
+            b,
+            sorted(
+                (f, os.path.getmtime(os.path.join(full, f)))
+                for f in os.listdir(full)
+                if f.endswith(".parquet")
+            ),
         )
     return out
 
@@ -247,16 +249,16 @@ def test_ivm_batch_rewrites_only_touched_buckets(spark, tmp_path):
     # Batch 0: 40 keys spanning all 8 buckets.
     rows0 = [(i, i % 40, "purchase", float(i)) for i in range(1, 200)]
     ivm.apply_batch(spark.createDataFrame(rows0, schema), 0)
-    before = _bucket_listing(ivm.key_path)
+    before = _bucket_listing(ivm.state)
     assert len(before) == B, f"expected {B} buckets, got {sorted(before)}"
 
     # Batch 1: touches only user_id=3 → bucket 3.
     ivm.apply_batch(
         spark.createDataFrame([(1000, 3, "refund", 42.0)], schema), 1
     )
-    after = _bucket_listing(ivm.key_path)
+    after = _bucket_listing(ivm.state)
     changed = [b for b in before if before[b] != after[b]]
-    assert changed == ["bucket=3"], f"rewrote {changed}"
+    assert changed == ["3"], f"rewrote {changed}"
 
     # And the maintained aggregate still equals the batch recompute.
     last = {}
@@ -714,28 +716,26 @@ def test_dup_span_removal_windows_are_per_doc(spark, sf_dir):
 
 def test_state_prune_pushes_static_partition_filter(spark, tmp_path):
     """Maintainer state reads must prune touched buckets AT THE FILE
-    INDEX: prune_buckets' isin literal lands in the scan's
-    PartitionFilters.  The broadcast-join idiom it replaced relied on
+    INDEX: the isin literal the maintainers pass to ManifestState.read
+    lands in the scan's PartitionFilters.  The broadcast-join idiom it replaced relied on
     dynamic partition pruning, which does NOT fire on that plan shape
     (in-memory build side without a selective scan predicate) — the full
     state dataset was scanned every batch (ADVICE r7)."""
     import re
 
-    from pypgcdc_spark.operators.state_prune import prune_buckets
+    from pypgcdc_spark.operators.atomic_state import ManifestState
     from pypgcdc_spark.plans.inspect import plan_text
 
-    path = str(tmp_path / "state")
-    (
-        spark.range(200)
-        .select(
+    state = ManifestState(spark, str(tmp_path / "state"), ["bucket"])
+    state.commit(
+        spark.range(200).select(
             F.col("id").alias("doc_id"),
             F.pmod(F.col("id"), F.lit(8)).cast("int").alias("bucket"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
+        ),
+        [(b,) for b in range(8)],
+        batch_id=0,
     )
-    df = prune_buckets(spark.read.parquet(path), [1, 3])
+    df = state.read("bucket INT, doc_id LONG", F.col("bucket").isin([1, 3]))
     txt = plan_text(df)
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", txt)
     assert m, txt

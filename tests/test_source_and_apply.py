@@ -366,3 +366,58 @@ def test_bucketed_merger_equals_full_overwrite(engine, spark, tmp_path):
         (str(r.id), r.text_data) for r in spark.read.parquet(target).collect()
     ) == snap
     assert snap == expected  # stale single-row replay didn't corrupt state
+
+
+def test_sinks_leave_partition_overwrite_conf_alone(engine, spark, tmp_path):
+    """No sink may change the session's partitionOverwriteMode: the
+    maintainers commit through their manifest, and the merger asks for
+    dynamic overwrite per write.  A leaked session value silently turns
+    every later static overwrite in the session into a dynamic one."""
+    from pypgcdc_spark.cdc import pgoutput as pg
+    from pypgcdc_spark.cdc.apply import DeleteAwareMerger
+    from pypgcdc_spark.cdc.registry import SchemaRegistry
+    from pypgcdc_spark.operators.cdc_dedup import (
+        PostingsIndexMaintainer,
+        SignatureIndexMaintainer,
+    )
+    from pypgcdc_spark.operators.ivm import BucketedViewMaintainer
+    from pypgcdc_spark.operators.join_ivm import A_SCHEMA, JoinViewMaintainer
+    from pypgcdc_spark.sources.replay import scan_frames
+
+    log = str(tmp_path / "m.log")
+    write_upsert_workload(log, n_keys=20, n_updates=10)
+    reg = SchemaRegistry()
+    for fr in scan_frames(log):
+        if fr.payload[:1] == b"R":
+            reg.register_relation(pg.decode_relation(fr.payload), lsn=fr.lsn)
+    docs = spark.createDataFrame(
+        [(10, "I", 1, "alpha beta gamma")], "lsn LONG, op STRING, doc_id LONG, text STRING"
+    )
+    sinks = [
+        (
+            BucketedViewMaintainer(spark, str(tmp_path / "ivm"), n_buckets=2).apply_batch,
+            spark.createDataFrame(
+                [(1, 1, "view", 1.0)],
+                "event_id LONG, user_id LONG, event_type STRING, value DOUBLE",
+            ),
+        ),
+        (
+            JoinViewMaintainer(spark, str(tmp_path / "join")).apply_batch,
+            spark.createDataFrame([(10, "A", 1, None, 7, "HIGH", None)], A_SCHEMA),
+        ),
+        (SignatureIndexMaintainer(spark, str(tmp_path / "sig")).apply_batch, docs),
+        (PostingsIndexMaintainer(spark, str(tmp_path / "post")).apply_batch, docs),
+        (
+            DeleteAwareMerger(spark, reg.get(16385), str(tmp_path / "m"), n_buckets=4),
+            engine.snapshot(log),
+        ),
+    ]
+    key = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        for sink, batch in sinks:
+            sink(batch, 0)
+            assert spark.conf.get(key) == "STATIC", sink
+    finally:
+        spark.conf.set(key, saved)

@@ -463,7 +463,7 @@ def r12_churn_model_kernel(spark) -> dict:
     from pyspark.sql import functions as F
 
     from pypgcdc_spark.operators.churn import expected_touched, recommend_buckets
-    from pypgcdc_spark.operators.ivm import BucketedViewMaintainer
+    from pypgcdc_spark.operators.ivm import KEY_SCHEMA, BucketedViewMaintainer
 
     N_STATE = 200_000
     KEYS = 2_000
@@ -493,11 +493,9 @@ def r12_churn_model_kernel(spark) -> dict:
                 r.b
                 for r in batch.select(bucket_expr.alias("b")).distinct().collect()
             )
-            rewritten = (
-                spark.read.parquet(m.key_path)
-                .filter(F.col("bucket").isin(buckets))
-                .count()
-            )
+            rewritten = m.state.read(
+                "bucket INT, " + KEY_SCHEMA, F.col("bucket").isin(buckets)
+            ).count()
             model_rows = N_STATE * (1 - math.exp(-KEYS / n_buckets))
             model_touched = expected_touched(KEYS, n_buckets)
             out[f"buckets_{n_buckets}"] = {

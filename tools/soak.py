@@ -511,13 +511,12 @@ class SoakAggMaintainer:
         else:
             self.n_buckets = n_buckets
 
-    def _extras(self, agg_rows) -> dict:
+    def _extras(self, agg_rows, n_buckets=None) -> dict:
+        from pypgcdc_spark.operators.churn import layout_record
+
         extra = {"agg": [list(r) for r in agg_rows]}
         if self.auto:
-            layout = {"n_buckets": int(self.n_buckets)}
-            if self._churn.value is not None:
-                layout["keys_ewma"] = float(self._churn.value)
-            extra["layout"] = layout
+            extra["layout"] = layout_record(n_buckets or self.n_buckets, self._churn)
         return extra
 
     def _maybe_rebucket(self, batch_id: int) -> None:
@@ -538,12 +537,11 @@ class SoakAggMaintainer:
         relaid = self.state.read("bucket INT, " + self.STATE_SCHEMA).withColumn(
             "bucket", F.pmod(F.col("id"), F.lit(new_n)).cast("int")
         )
-        old_n = self.n_buckets
-        self.n_buckets = new_n
         self.state.replace_all(
-            relaid, batch_id, self.guard_id, extra=self._extras(self._agg_rows)
+            relaid, batch_id, self.guard_id, extra=self._extras(self._agg_rows, new_n)
         )
-        self.rebucket_events.append((old_n, new_n))
+        self.rebucket_events.append((self.n_buckets, new_n))
+        self.n_buckets = new_n
 
     def aggregate_rows(self) -> list:
         return sorted(
